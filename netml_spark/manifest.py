@@ -5,12 +5,16 @@ metrics to a checkpoint manifest so interrupted backfills resume
 idempotently (SURVEY.md §4.2; the reference has only a driver-side spool
 buffer, cli.py:246).
 
-Design (Parquet-dir backend; ``use_iceberg()`` upgrades the partition
-writes to Iceberg ``writeTo`` tables when the runtime jar is present —
-detected at call time, same API):
+Design (Parquet-dir backend; the partition writes go to an Iceberg
+``writeTo`` table instead when ``iceberg_available()`` finds the runtime jar
+and a catalog — detected at construction, same API):
 
 - a *stage* writes its output partitioned by a user-chosen partition column
   (e.g. ``source`` or a date bucket), one directory per partition value;
+- the manifest makes ONE pass over each partition's data, the write: the
+  row count and checksum are ``DataFrame.observe`` metrics on the frame
+  the write executes, read once the write has returned — no cache, no
+  second job;
 - after each partition lands, a manifest row
   (stage, partition, input_fp, row_count, checksum, status, wall_s) is
   appended to ``<root>/_manifest`` (a tiny parquet table — the only
@@ -27,9 +31,9 @@ detected at call time, same API):
   silently skipped;
 - the checksum is an order-insensitive xor-fold of per-row xxhash64 over
   the output columns, computed as 64 per-bit parity aggregates
-  (sum(bit) % 2 per bit position) — a plain hash aggregate with map-side
-  partials, O(1) state per partition regardless of row count (the naive
-  collect_list fold would buffer every row hash);
+  (sum(bit) % 2 per bit position) — O(1) state per task regardless of row
+  count (the naive collect_list fold would buffer every row hash);
+  ``partition_metrics`` is the same pair as a plain aggregate;
 - partitions run ``max_parallel`` at a time (Spark schedules jobs from
   concurrent driver threads fairly; each partition is an independent job,
   so a 20-source backfill overlaps scan/shuffle/write across sources).
@@ -44,7 +48,7 @@ from functools import reduce
 from threading import Lock
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -62,16 +66,19 @@ def xor_checksum(h) -> F.Column:
     return F.coalesce(reduce(lambda a, b: a.bitwiseOR(b), terms), F.lit(0))
 
 
-def partition_metrics(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """(row_count, checksum) for a DataFrame: checksum = xor-fold of
-    xxhash64 over all (stringified) columns — order-insensitive, so
-    partition-internal ordering changes don't break resume comparisons."""
-    cols = list(cols or df.columns)
+def _metric_columns(cols: Sequence[str]) -> list[F.Column]:
+    """The (row_count, checksum) aggregate columns over ``cols``: checksum =
+    xor-fold of xxhash64 over the (stringified) columns — order-insensitive,
+    so partition-internal ordering changes don't break resume comparisons.
+    Valid both in ``DataFrame.agg`` and in ``DataFrame.observe``."""
     h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
-    return df.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        xor_checksum(h).alias("checksum"),
-    )
+    return [F.count(F.lit(1)).alias("row_count"), xor_checksum(h).alias("checksum")]
+
+
+def partition_metrics(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+    """(row_count, checksum) of a DataFrame as a one-row aggregate — the
+    reference for the metrics ``run_stage`` observes on its writes."""
+    return df.agg(*_metric_columns(list(cols or df.columns)))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -107,8 +114,6 @@ class CheckpointManifest:
         self.root = root
         self.path = os.path.join(root, "_manifest")
         self._lock = Lock()
-        self._buffer: list | None = None  # non-None => run_stage batching
-        self._flush_every = 32
         # Iceberg upgrade hook: when the runtime jar + a catalog are
         # present, partition outputs land as Iceberg table partitions
         # (replaceWhere semantics); otherwise parquet dirs.
@@ -152,43 +157,32 @@ class CheckpointManifest:
         self.spark.createDataFrame(pd.DataFrame(rows)).coalesce(1) \
             .write.mode("append").parquet(self.path)
 
-    def record(self, stage: str, partition: str, row_count: int,
-               checksum: int, wall_s: float, status: str = "ok",
-               input_fp: str = "") -> None:
-        row = {
-            "stage": stage, "partition": str(partition),
-            "input_fp": str(input_fp),
-            "row_count": int(row_count), "checksum": int(checksum),
-            "wall_s": float(wall_s), "status": status,
-            "finished_at": time.time(),
-        }
-        with self._lock:  # manifest appends serialize; partition jobs don't
-            if self._buffer is not None:
-                self._buffer.append(row)
-                if len(self._buffer) >= self._flush_every:
-                    self._write_rows(self._buffer)
-                    self._buffer = []
-            else:
-                self._write_rows([row])
-
-    def _flush(self) -> None:
-        with self._lock:
-            if self._buffer:
-                self._write_rows(self._buffer)
-            self._buffer = None
-
     def _write_partition(self, df: DataFrame, out_root: str,
-                         partition_col: str, pv) -> None:
+                         partition_col: str, pv) -> dict:
+        """Write one partition and return its observed row_count and
+        checksum, counted by the write itself. The checksum covers the
+        build's columns, not the stamped Iceberg partition column, so both
+        backends record the same value."""
+        metrics = _metric_columns(df.columns)
+        # observe must be the last operator before the sink, with no
+        # repartition after it: the metrics are then counted in the write's
+        # result stage, where Spark applies each partition's accumulator
+        # update once even if tasks are retried.
+        obs = Observation()
         if self.iceberg:
             (
                 df.withColumn(partition_col, F.lit(str(pv)))
+                .observe(obs, *metrics)
                 .writeTo(self.iceberg_table)
                 .overwritePartitions()
             )
         else:
-            df.write.mode("overwrite").parquet(
+            df.observe(obs, *metrics).write.mode("overwrite").parquet(
                 os.path.join(out_root, f"{partition_col}={pv}")
             )
+        # get blocks until the observed action has finished: read it only
+        # after the write returned (a failed write raises before this line)
+        return obs.get
 
     def run_stage(
         self,
@@ -220,10 +214,24 @@ class CheckpointManifest:
         continues — same isolation as build/write failures."""
         out_root = os.path.join(self.root, output_subdir or stage)
         done = self.completed(stage)
+        flush_every = max(1, int(flush_every))
+        buffer: list[dict] = []
         results = {}
-        with self._lock:
-            self._buffer = []
-            self._flush_every = max(1, int(flush_every))
+
+        def record(pv, row_count: int, checksum: int, t0: float,
+                   input_fp: str, status: str = "ok") -> None:
+            row = {
+                "stage": stage, "partition": str(pv),
+                "input_fp": str(input_fp),
+                "row_count": int(row_count), "checksum": int(checksum),
+                "wall_s": time.time() - t0, "status": status,
+                "finished_at": time.time(),
+            }
+            with self._lock:  # manifest appends serialize; partition jobs don't
+                buffer.append(row)
+                if len(buffer) >= flush_every:
+                    self._write_rows(buffer)
+                    buffer.clear()
 
         def fp_of(pv) -> str:
             return str(input_fp(pv)) if input_fp is not None else ""
@@ -233,37 +241,32 @@ class CheckpointManifest:
             try:
                 fp = fp_of(pv)
             except Exception as e:
-                self.record(stage, pv, 0, 0, time.time() - t0,
-                            status="error", input_fp="")
+                record(pv, 0, 0, t0, "", status="error")
                 return pv, ("error", str(e))
             if str(pv) in done and (fp == "" or done[str(pv)] == fp):
                 return pv, ("skipped", None)
             try:
-                df = build(pv).cache()
+                df = build(pv)
             except Exception as e:
-                self.record(stage, pv, 0, 0, time.time() - t0,
-                            status="error", input_fp=fp)
+                record(pv, 0, 0, t0, fp, status="error")
                 return pv, ("error", str(e))
             try:
-                m = partition_metrics(df).collect()[0]
-                self._write_partition(df, out_root, partition_col, pv)
-                self.record(stage, pv, m.row_count, m.checksum,
-                            time.time() - t0, input_fp=fp)
-                return pv, ("ok", m.row_count)
+                m = self._write_partition(df, out_root, partition_col, pv)
             except Exception as e:
                 # one bad partition must not kill a 20-source backfill:
                 # record it (status='error' rows never satisfy resume, so
                 # the next run retries it) and keep going
-                self.record(stage, pv, 0, 0, time.time() - t0,
-                            status="error", input_fp=fp)
+                record(pv, 0, 0, t0, fp, status="error")
                 return pv, ("error", str(e))
-            finally:
-                df.unpersist()
+            record(pv, m["row_count"], m["checksum"], t0, fp)
+            return pv, ("ok", m["row_count"])
 
         try:
             with ThreadPoolExecutor(max_workers=max(1, int(max_parallel))) as ex:
                 for pv, res in ex.map(run_one, partitions):
                     results[pv] = res
         finally:
-            self._flush()
+            with self._lock:
+                if buffer:
+                    self._write_rows(buffer)
         return results

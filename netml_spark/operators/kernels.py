@@ -2,11 +2,13 @@
 
 Operate on array columns of the sequences shape (times:array<double>,
 tokens:array<int>). Wherever semantics allow, the kernel is a *native array
-expression* (JVM-side, whole-stage codegen, zero Python): IAT, SIZE,
-IAT_SIZE, pad/truncate, header flag counts. The genuinely sequential or
-numpy-only kernels (SAMP's dual 500-cap loop, FFT) are Arrow-batched pandas
-UDFs with numpy inner loops — no per-row Python at the Spark boundary
-(input_hint mandate).
+expression* (JVM-side, zero Python): IAT, SIZE, IAT_SIZE, pad/truncate,
+header flag counts. Their higher-order functions (``transform``,
+``zip_with``, ``aggregate``) are ``CodegenFallback`` in Spark, so they are
+interpreted per row inside the generated stage, not compiled into it.
+The genuinely sequential or numpy-only kernels (SAMP's dual 500-cap loop,
+FFT) are Arrow-batched pandas UDFs with numpy inner loops — no per-row
+Python at the Spark boundary (input_hint mandate).
 
 Each kernel cites the reference lines whose output it reproduces; parity is
 pinned by tests vs the numpy oracle (netml_spark.oracle.netml_ref).
@@ -103,16 +105,6 @@ def header_features(flags_arr, protos_arr, ttls_arr) -> Column:
 # ---------------------------------------------------------------------------
 # Arrow/pandas-UDF kernels (sequential or numpy-only semantics)
 # ---------------------------------------------------------------------------
-
-
-def iat_pandas_udf():
-    """Pandas-UDF twin of iat() — kept for benchmarking native vs Arrow."""
-
-    @pandas_udf("array<double>")
-    def _iat(times: pd.Series) -> pd.Series:
-        return times.map(lambda v: np.diff(np.asarray(v, dtype=np.float64)))
-
-    return _iat
 
 
 def _samp_fast_batch(times: pd.Series, tokens: pd.Series, feat: str, rate: float):

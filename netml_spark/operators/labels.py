@@ -68,13 +68,3 @@ def label_join(
     if anti:
         return flows.join(F.broadcast(lab), key_cols, "left_anti")
     return flows.join(F.broadcast(lab), key_cols, "inner")
-
-
-def read_cicids_csv(spark, path: str) -> DataFrame:
-    """Read a CICIDS-2017 label CSV (leading-space column names,
-    parser.py:890-891) and normalize the key columns."""
-    df = spark.read.option("header", True).csv(path)
-    renames = {c: c.strip().lower().replace(" ", "_") for c in df.columns}
-    for old, new in renames.items():
-        df = df.withColumnRenamed(old, new)
-    return df

@@ -172,7 +172,7 @@ class FeaturePlan:
             # aggregate — including the order-sensitive float sums and
             # stddev — accumulates in the identical sequence and the
             # result is bit-equal; the chain upstream of the cache runs
-            # once (plan property ``stats_branch_no_recompute``).
+            # once (plan property ``featureplan_stats_no_recompute``).
             ev = seqs.select(
                 *flow_keys,
                 F.explode(F.arrays_zip("times", "tokens")).alias("_z"),

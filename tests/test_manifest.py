@@ -220,14 +220,16 @@ def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
     calls = []
 
     class _FakeWriter:
-        def __init__(self, table, cols):
-            self.table, self.cols = table, cols
+        def __init__(self, table, df):
+            self.table, self.df = table, df
 
         def overwritePartitions(self):
-            calls.append(("overwritePartitions", self.table, self.cols))
+            calls.append(("overwritePartitions", self.table, list(self.df.columns)))
+            # a real writer executes the frame it is handed
+            self.df.write.format("noop").mode("overwrite").save()
 
     def fake_write_to(self, table):
-        return _FakeWriter(table, list(self.columns))
+        return _FakeWriter(table, self)
 
     monkeypatch.setattr(DataFrame, "writeTo", fake_write_to)
     root = str(tmp_path / "ice_shape")
@@ -244,6 +246,8 @@ def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
         assert verb == "overwritePartitions"
         assert table == "cat.db.features"   # the explicit identifier, never a path guess
         assert "source" in cols             # partition column stamped before writeTo
+    man = m.read().filter(F.col("status") == "ok").toPandas()
+    assert list(man.row_count) == [2, 2]    # counted by the executed write
     # manifest recorded both partitions ok -> a rerun skips them
     res2 = m.run_stage(
         "feat", ["s1", "s2"],
@@ -251,3 +255,45 @@ def test_iceberg_write_call_shape_pinned(spark, tmp_path, monkeypatch):
         partition_col="source",
     )
     assert {s for s, _ in res2.values()} == {"skipped"}
+
+
+def test_run_stage_one_job_per_partition(spark, tmp_path):
+    """A partition is one pass over its data: the write is the only Spark
+    job (metrics are observed on it), and nothing stays cached."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "ckpt_onejob")
+    m = CheckpointManifest(spark, root)
+
+    def build(p):
+        sc.setJobGroup(f"{root}:{p}", f"onejob {p}")
+        return spark.createDataFrame(pd.DataFrame({"src": [p] * 3, "v": [1, 2, 3]}))
+
+    persisted = sc._jsc.getPersistentRDDs().size()
+    r = m.run_stage("s", ["a", "b"], build, "src", max_parallel=2)
+    assert r == {"a": ("ok", 3), "b": ("ok", 3)}
+    jobs = [sc.statusTracker().getJobIdsForGroup(f"{root}:{p}") for p in "ab"]
+    assert [len(j) for j in jobs] == [1, 1]
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_observed_metrics_match_partition_metrics(spark, tmp_path):
+    """The (row_count, checksum) observed on the write equals the
+    partition_metrics aggregate, also for empty and zero-partition frames."""
+    base = spark.createDataFrame(pd.DataFrame({"src": ["x"] * 4, "v": [1, 2, 3, 4]}))
+    frames = {
+        "full": base,
+        "filtered_empty": base.filter(F.col("v") > 10),
+        "no_partitions": spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), base.schema),
+    }
+    assert frames["no_partitions"].rdd.getNumPartitions() == 0
+    m = CheckpointManifest(spark, str(tmp_path / "ckpt_obs"))
+    r = m.run_stage("s", list(frames), frames.__getitem__, "part")
+    assert {p: s for p, (s, _) in r.items()} == dict.fromkeys(frames, "ok")
+    man = {row.partition: (row.row_count, row.checksum)
+           for row in m.read().collect()}
+    for p, df in frames.items():
+        ref = partition_metrics(df).collect()[0]
+        assert man[p] == (ref.row_count, ref.checksum), p
+    assert man["full"][0] == 4 and man["full"][1] != 0
+    assert man["filtered_empty"] == man["no_partitions"] == (0, 0)
